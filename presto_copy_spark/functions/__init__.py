@@ -1,30 +1,118 @@
 """Presto-compatibility function layer (SURVEY §2.9).
 
-- compat.py — Presto-named scalar functions as Spark SQL UDFs (inlined
-  into Catalyst plans; JVM-side).
+- compat.py / geometry.py — Presto-named scalar functions whose semantics
+  are a pure Spark SQL expression, declared as SQL macros (``SQL_UDFS``,
+  ``SQL_GEOMETRY_UDFS``; one table here, ``MACROS``).  Each is created
+  with ``CREATE OR REPLACE TEMPORARY FUNCTION`` and inlined into Catalyst
+  plans (JVM-side, no Python round-trip).
+- ml_sql.py / stats.py and the ``_register_*_py`` helpers below — the
+  names with no Spark expression, as Arrow-batched pandas UDFs.
 - presto.py — Column helpers for functions whose argument conventions
   need build-time translation (datetime unit-first args, MySQL formats)
   and Presto-named aggregates.
+
+Creating the 211 macros costs seconds of cold parsing and analysis per
+session, so macros are created per name by ``ensure_macros``: all at once
+by ``register_all`` (registry builders, ``bench.py``, tests), or on first
+reference by ``Engine.sql`` — the analogue of Presto resolving
+SQL-invoked functions from its namespace manager when a query names them
+(AbstractSqlInvokedFunctionNamespaceManager).
 """
 
 from __future__ import annotations
 
+import weakref
+from collections.abc import Iterable
+from graphlib import TopologicalSorter
+
 from pyspark.sql import SparkSession
 
-from .compat import SQL_UDFS, register_sql_udfs
-from .geometry import register_geometry_sql
+from ..dialect import tokenize
+from .compat import SQL_UDFS
+from .geometry import SQL_GEOMETRY_UDFS
 from .ml_sql import register_ml_sql
 from .stats import register_stats_sql
 from . import presto
 
-__all__ = ["register_all", "SQL_UDFS", "presto"]
+__all__ = [
+    "register_all",
+    "ensure_macros",
+    "macro_names_in",
+    "MACROS",
+    "MACRO_DEPS",
+    "SQL_UDFS",
+    "presto",
+]
+
+# Every SQL macro: name -> (argument signature, return type, body).
+MACROS: dict[str, tuple[str, str, str]] = {**SQL_UDFS, **SQL_GEOMETRY_UDFS}
 
 
-def register_all(spark: SparkSession) -> None:
-    """Register the whole compat surface, once per SparkSession.
+def macro_names_in(sql: str) -> set[str]:
+    """The ``MACROS`` names among the word tokens of ``sql`` (string
+    literals never match; Spark's backquoted names tokenize as words)."""
+    return {tok.lower() for kind, tok in tokenize(sql) if kind == "word"} & MACROS.keys()
+
+
+# name -> the macros its body calls.  Spark validates a body when it is
+# created, so these must exist first.
+MACRO_DEPS: dict[str, frozenset[str]] = {
+    name: frozenset(macro_names_in(body) - {name})
+    for name, (_sig, _ret, body) in MACROS.items()
+}
+
+# Creation rank of every macro, dependencies first (a cycle raises here).
+_RANK = {
+    name: i
+    for i, name in enumerate(TopologicalSorter(MACRO_DEPS).static_order())
+}
+
+# SparkSession -> names of the macros created in it.  A sibling session
+# from spark.newSession() has its own function registry and its own
+# entry here.
+_CREATED: weakref.WeakKeyDictionary[SparkSession, set[str]] = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def ensure_macros(spark: SparkSession, names: Iterable[str]) -> list[str]:
+    """Create the macros among ``names`` (keys of ``MACROS``) that
+    ``spark`` lacks, with their transitive dependencies, dependencies
+    first.  Returns the names created, in creation order.
+
+    A macro captures the SQL confs in force when it is created
+    (``spark.sql.ansi.enabled``, ``spark.sql.session.timeZone``, ...).
+    A body Spark rejects raises; the name stays missing."""
+    created = _CREATED.setdefault(spark, set())
+    todo: set[str] = set()
+    stack = [n for n in names if n not in created]
+    while stack:
+        name = stack.pop()
+        if name not in todo and name not in created:
+            todo.add(name)
+            stack.extend(MACRO_DEPS[name])
+    out = []
+    for name in sorted(todo, key=_RANK.__getitem__):
+        sig, ret, body = MACROS[name]
+        spark.sql(
+            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({sig})"
+            f" RETURNS {ret} RETURN {body}"
+        )
+        created.add(name)
+        out.append(name)
+    return out
+
+
+def register_all(spark: SparkSession, *, macros: bool = True) -> None:
+    """Register the compat surface on ``spark``: the pandas UDFs, plus
+    every SQL macro unless ``macros`` is false.
+
+    Registry builders, ``bench.py`` and tests call this (the eager
+    path).  ``Engine`` passes ``macros=False`` and ``Engine.sql`` creates
+    the macros a statement names on first reference.
 
     Idempotent: queries may call this defensively (the driver invokes
-    registry callables standalone), but re-registering ~100 UDFs per
+    registry callables standalone), but re-registering the UDFs per
     invocation costs real time and spams "function replaced" warnings
     (r3 func_specialty regression 0.11 -> 0.35 s), so repeat calls on
     the same live session are no-ops.
@@ -34,18 +122,17 @@ def register_all(spark: SparkSession) -> None:
     # but have separate function registries and isolated SQLConf, so a
     # runtime conf set here is visible exactly to the sessions that
     # already ran registration.
-    marker = "spark.presto_copy.compat_registered"
-    if spark.conf.get(marker, None) == "true":
-        return
-    register_sql_udfs(spark)
-    register_ml_sql(spark)
-    register_geometry_sql(spark)
-    register_stats_sql(spark)
-    _register_normalize(spark)
-    _register_binary_py(spark)
-    _register_color_py(spark)
-    _register_sketch_py(spark)
-    spark.conf.set(marker, "true")
+    marker = "spark.presto_copy.pandas_udfs_registered"
+    if spark.conf.get(marker, None) != "true":
+        register_ml_sql(spark)
+        register_stats_sql(spark)
+        _register_normalize(spark)
+        _register_binary_py(spark)
+        _register_color_py(spark)
+        _register_sketch_py(spark)
+        spark.conf.set(marker, "true")
+    if macros:
+        ensure_macros(spark, MACROS)
 
 
 def _register_color_py(spark: SparkSession) -> None:

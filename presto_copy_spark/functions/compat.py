@@ -6,9 +6,10 @@ DateTimeFunctions.java, Array*/Map*/Json* files) and is registered in
 metadata/BuiltInTypeAndFunctionNamespaceManager.java:735-1010.
 
 Here every function whose semantics are expressible as a pure Spark SQL
-expression is declared as ``name -> (signature, body)`` and registered via
-``CREATE OR REPLACE TEMPORARY FUNCTION`` — so it is inlined by Catalyst
-into whole-stage codegen (JVM-side, no Python round-trip; the 100 TB-safe
+expression is declared as ``name -> (signature, return type, body)`` and
+created via ``CREATE OR REPLACE TEMPORARY FUNCTION``
+(``functions.ensure_macros``) — so it is inlined by Catalyst into
+whole-stage codegen (JVM-side, no Python round-trip; the 100 TB-safe
 path).  Functions needing build-time logic (e.g. Presto→Java datetime
 format translation) live in presto.py as Column helpers instead.
 
@@ -19,9 +20,7 @@ levenshtein, sequence, element_at, ...) we register nothing.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
-
-__all__ = ["SQL_UDFS", "register_sql_udfs"]
+__all__ = ["SQL_UDFS"]
 
 
 # --------------------------------------------------------------------------
@@ -943,33 +942,3 @@ SQL_UDFS.update(
         ),
     }
 )
-
-
-def register_sql_udfs(spark: SparkSession) -> list[str]:
-    """Register all compat functions; returns names that failed (if any).
-
-    Idempotent per session (temporary functions survive for the session
-    lifetime, so re-running the ~70 CREATE FUNCTION statements on every
-    query call would be pure overhead).  Failures are surfaced with a
-    warning — every name in SQL_UDFS is expected to register (colliding
-    builtin names are excluded from the table by design), so a failure
-    here is a bug, not an expected condition.  The idempotency marker is
-    set unconditionally: re-running the same statements cannot fix a
-    name that failed once."""
-    marker = "spark.sql.prestoCompat.registered"
-    if spark.conf.get(marker, "false") == "true":
-        return []
-    failed = []
-    for name, (sig, ret, body) in SQL_UDFS.items():
-        try:
-            spark.sql(
-                f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({sig}) "
-                f"RETURNS {ret} RETURN {body}"
-            )
-        except Exception as exc:  # pragma: no cover - defensive
-            failed.append(name)
-            import warnings
-
-            warnings.warn(f"presto-compat UDF {name!r} failed to register: {exc}")
-    spark.conf.set(marker, "true")
-    return failed

@@ -2191,8 +2191,8 @@ SQL_GEOMETRY_UDFS.update(
 
 # dispatch the tagged type through the existing names:
 # - st_distance: spherical points -> great-circle meters (compat.py
-#   great_circle_distance is the same Vincenty text; register_all
-#   registers compat before geometry, so the reference resolves)
+#   great_circle_distance is the same Vincenty text; ensure_macros
+#   creates it first, as a dependency)
 # - st_area: spherical polygon -> spherical excess; other spherical
 #   types raise like validateSphericalType
 # - st_astext: print the untagged WKT
@@ -2338,19 +2338,3 @@ def sql_spatial_partitions(json_text: str, g: str, d: str | None) -> str:
         "     lf -> CAST(lf.id AS INT))), 1)), 1)"
         " END), 1)), 1)"
     )
-
-
-def register_geometry_sql(spark) -> None:
-    """Register the SQL-invocable ST_* twins (idempotent per session)."""
-    marker = "spark.sql.prestoCompat.geometryRegistered"
-    try:
-        if spark.conf.get(marker, "false") == "true":
-            return
-    except Exception:
-        pass
-    for name, (sig, ret, body) in SQL_GEOMETRY_UDFS.items():
-        spark.sql(
-            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({sig})"
-            f" RETURNS {ret} RETURN {body}"
-        )
-    spark.conf.set(marker, "true")

@@ -7,8 +7,8 @@ Classifier model; the engine's documented analogue (operators/ml.py,
 ml_learn_classify) is a nearest-centroid model — here exposed through
 SQL as:
 
-- ``learn_classifier(label, features)`` — a GROUPED_AGG pandas UDF
-  (Arrow-batched; partials per executor, merge in the agg) returning
+- ``learn_classifier(label, features)`` — a grouped-aggregate pandas
+  UDF (Series, Series -> scalar; Arrow-batched) returning
   the model as ``map<label, centroid array>``.
 - ``classify(features, model)`` — scalar pandas UDF: argmin Euclidean
   distance over the model's centroids; ties break on label order.
@@ -25,6 +25,7 @@ vectorized in Arrow batches.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, MapType, StringType
@@ -32,7 +33,9 @@ from pyspark.sql.types import ArrayType, DoubleType, MapType, StringType
 __all__ = ["register_ml_sql"]
 
 
-def _learn_classifier_impl(labels, feats):
+def _learn_classifier_impl(labels: pd.Series, feats: pd.Series) -> dict:
+    # the Series -> scalar type hints make this a grouped-aggregate
+    # pandas UDF (pandas_udf resolves them from this module's globals)
     import numpy as np
 
     sums: dict[str, "np.ndarray"] = {}
@@ -53,7 +56,6 @@ def _learn_classifier_impl(labels, feats):
 
 def _classify_impl(feats, models):
     import numpy as np
-    import pandas as pd
 
     out = []
     for f, m in zip(feats, models):
@@ -72,7 +74,7 @@ def _classify_impl(feats, models):
 def register_ml_sql(spark: SparkSession) -> None:
     model_type = MapType(StringType(), ArrayType(DoubleType()))
 
-    learn = F.pandas_udf(_learn_classifier_impl, model_type, F.PandasUDFType.GROUPED_AGG)
+    learn = F.pandas_udf(_learn_classifier_impl, model_type)
     spark.udf.register("learn_classifier", learn)
 
     classify = F.pandas_udf(_classify_impl, StringType())

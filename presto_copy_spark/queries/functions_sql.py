@@ -472,9 +472,9 @@ def func_presto_compat(spark: SparkSession, sf_dir: str) -> DataFrame:
     ground truth where DuckDB lacks the construct — map element access
     semantics differ, so map outputs are extracted to scalars).
     """
-    from ..functions.compat import register_sql_udfs
+    from ..functions import SQL_UDFS, ensure_macros
 
-    register_sql_udfs(spark)
+    ensure_macros(spark, SQL_UDFS)
     return compile_once_scalar(
         _sql(
         spark,

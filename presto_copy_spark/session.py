@@ -28,10 +28,51 @@ AQE coalescing from a high initial number, which is why
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "default_parallelism"]
+
+
+# a JVM option that selects the garbage collector (the JVM refuses two)
+_COLLECTOR_FLAG = re.compile(r"-XX:\+Use\w*GC\b")
+
+
+def deployment_conf(key: str) -> str | None:
+    """``key``'s value in the deployment's ``spark-defaults.conf`` (the
+    file spark-submit reads: ``$SPARK_CONF_DIR``, else
+    ``$SPARK_HOME/conf``), or None.  Builder settings override that file
+    when the JVM starts, so a setting meant to extend it reads it here."""
+    conf_dir = os.environ.get("SPARK_CONF_DIR")
+    if not conf_dir:
+        home = os.environ.get("SPARK_HOME")
+        if not home:
+            from pyspark.find_spark_home import _find_spark_home
+
+            home = _find_spark_home()
+        conf_dir = os.path.join(home, "conf")
+    try:
+        with open(os.path.join(conf_dir, "spark-defaults.conf")) as f:
+            lines = f.read().splitlines()
+    except OSError:
+        return None
+    value = None
+    for line in lines:  # java.util.Properties: the last entry wins
+        m = re.match(r"\s*([^\s=:#!][^\s=:]*)\s*[=:\s]\s*(.*?)\s*$", line)
+        if m and m.group(1) == key:
+            value = m.group(2)
+    return value
+
+
+def java_options(existing: str | None, gc: str | None, extra: str) -> str:
+    """JVM options: ``existing`` (the deployment's), then the collector
+    flag, then ``extra``.  ``gc`` None means the engine default
+    ``-XX:+UseParallelGC``, dropped when ``existing`` already selects a
+    collector; an explicit ``gc`` is always appended."""
+    if gc is None:
+        gc = "" if existing and _COLLECTOR_FLAG.search(existing) else "-XX:+UseParallelGC"
+    return " ".join(p.strip() for p in (existing or "", gc, extra) if p.strip())
 
 
 def default_parallelism() -> int:
@@ -130,40 +171,6 @@ def get_spark(
         # broadcast blocks stay pinned until a driver full-GC happens to
         # run, which in a long-lived session means unbounded growth.
         .config("spark.cleaner.periodicGC.interval", "1min")
-        # Throughput GC for batch work (round 15): this engine is a
-        # classic allocation-heavy batch workload (hash aggs,
-        # collect_list buffers, exploded shingle rows), where G1's
-        # concurrent marking + region bookkeeping costs throughput it
-        # only repays in pause-time SLAs we don't have.  Measured on
-        # the 10-query heavy subset, 5 interleaved fresh-JVM pairs:
-        # ParallelGC won every paired window (totals 5.9/4.4/4.9/4.3/4.9
-        # vs G1 7.3/4.6/8.0/5.5/5.5 s) and 8/10 per-query minima, -6%
-        # on the sum of minima.  Same recommendation class as the Spark
-        # tuning guide's GC section for throughput-bound executors —
-        # not a local-mode trick; override with SPARK_GRAFT_GC (e.g.
-        # "-XX:+UseG1GC") where pause times matter.  Takes effect only
-        # at JVM launch (bench/driver/tests all start fresh JVMs
-        # through here).
-        # ADVICE r15: the flag must reach EXECUTORS too (on a cluster the
-        # batch work runs there; in local mode executor opts are unused
-        # and harmless), and a deployment-provided extraJavaOptions must
-        # not be silently clobbered — SPARK_GRAFT_GC_EXTRA appends.
-        .config(
-            "spark.driver.extraJavaOptions",
-            (
-                os.environ.get("SPARK_GRAFT_GC", "-XX:+UseParallelGC")
-                + " "
-                + os.environ.get("SPARK_GRAFT_GC_EXTRA", "")
-            ).strip(),
-        )
-        .config(
-            "spark.executor.extraJavaOptions",
-            (
-                os.environ.get("SPARK_GRAFT_GC", "-XX:+UseParallelGC")
-                + " "
-                + os.environ.get("SPARK_GRAFT_GC_EXTRA", "")
-            ).strip(),
-        )
         # Generated-class cache sized to the workload (round 15): the
         # bench loop carries 104 distinct queries x several codegen
         # units each; the default 100-entry cache thrashes between
@@ -172,6 +179,34 @@ def get_spark(
         # static conf, read at JVM start).
         .config("spark.sql.codegen.cache.maxEntries", "5000")
     )
+    # Throughput GC for batch work (round 15): this engine is a
+    # classic allocation-heavy batch workload (hash aggs,
+    # collect_list buffers, exploded shingle rows), where G1's
+    # concurrent marking + region bookkeeping costs throughput it
+    # only repays in pause-time SLAs we don't have.  Measured on
+    # the 10-query heavy subset, 5 interleaved fresh-JVM pairs:
+    # ParallelGC won every paired window (totals 5.9/4.4/4.9/4.3/4.9
+    # vs G1 7.3/4.6/8.0/5.5/5.5 s) and 8/10 per-query minima, -6%
+    # on the sum of minima.  Same recommendation class as the Spark
+    # tuning guide's GC section for throughput-bound executors —
+    # not a local-mode trick; override with SPARK_GRAFT_GC (e.g.
+    # "-XX:+UseG1GC") where pause times matter.  Takes effect only
+    # at JVM launch (bench/driver/tests all start fresh JVMs
+    # through here).
+    # The flag reaches EXECUTORS too (on a cluster the batch work
+    # runs there; in local mode executor opts are unused and
+    # harmless).  A deployment's own extraJavaOptions
+    # (spark-defaults.conf) are kept: the engine's flags are
+    # appended, never written over them.
+    for key in ("spark.driver.extraJavaOptions", "spark.executor.extraJavaOptions"):
+        b = b.config(
+            key,
+            java_options(
+                deployment_conf(key),
+                os.environ.get("SPARK_GRAFT_GC"),
+                os.environ.get("SPARK_GRAFT_GC_EXTRA", ""),
+            ),
+        )
     if is_local:
         # Single-host executors: shuffle blocks never cross a network,
         # so spend zero cycles on lz4 and keep the files on tmpfs

@@ -239,6 +239,52 @@ def test_register_all_covers_sibling_sessions(spark):
         sibling.stop if False else None  # sibling shares the context; no stop
 
 
+def test_register_all_raises_no_warning(spark):
+    """Registering the whole surface on a fresh session emits no Python
+    warning (the grouped-aggregate pandas UDF uses type hints, not the
+    deprecated PandasUDFType)."""
+    import warnings
+
+    from presto_copy_spark.functions import register_all
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        register_all(spark.newSession())
+
+
+def test_java_options_append_to_deployment_value():
+    """The engine's JVM flags go after a deployment's extraJavaOptions
+    instead of replacing them; the default collector steps aside when the
+    deployment already picks one."""
+    from presto_copy_spark.session import java_options
+
+    assert java_options(None, None, "") == "-XX:+UseParallelGC"
+    assert (
+        java_options("-Dconfig=/etc/x -Xss4m", None, "-Xlog:gc")
+        == "-Dconfig=/etc/x -Xss4m -XX:+UseParallelGC -Xlog:gc"
+    )
+    assert java_options(" -XX:+UseG1GC ", None, "") == "-XX:+UseG1GC"
+    assert java_options("-Da=1", "-XX:+UseZGC", "") == "-Da=1 -XX:+UseZGC"
+    assert java_options("", "", "") == ""
+
+
+def test_deployment_conf_reads_spark_defaults(tmp_path, monkeypatch):
+    from presto_copy_spark.session import deployment_conf
+
+    (tmp_path / "spark-defaults.conf").write_text(
+        "# spark.driver.extraJavaOptions -Dcommented=1\n"
+        "spark.driver.extraJavaOptions   -Dold=1\n"
+        "spark.executor.extraJavaOptions=-Dexec=1 -Xss4m\n"
+        "spark.driver.extraJavaOptions -Dnew=1 -Dx=2  \n"
+    )
+    monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path))
+    assert deployment_conf("spark.driver.extraJavaOptions") == "-Dnew=1 -Dx=2"
+    assert deployment_conf("spark.executor.extraJavaOptions") == "-Dexec=1 -Xss4m"
+    assert deployment_conf("spark.driver.memory") is None
+    monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path / "missing"))
+    assert deployment_conf("spark.driver.extraJavaOptions") is None
+
+
 def test_infoschema_sees_post_first_query_ddl(spark):
     """information_schema views must reflect tables created AFTER the
     first information_schema query (ADVICE r4 item 1)."""

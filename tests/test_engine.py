@@ -189,11 +189,16 @@ def test_describe_returns_presto_types(engine):
     assert cols[:2] == ["r_regionkey", "r_name"]  # declaration order
 
 
-def test_show_tables_and_functions(engine):
+def test_show_tables_and_functions(engine, spark):
     tables = {r.Table for r in engine.sql("SHOW TABLES").collect()}
     assert {"lineitem", "orders", "documents"} <= tables
     fns = {r.Function for r in engine.sql("SHOW FUNCTIONS").collect()}
     assert "strpos" in fns  # registered compat function is visible
+    # a fresh session has created no macro yet; all are still listed
+    fresh = Engine(spark.newSession(), SF_DIR)
+    fns = {r.Function for r in fresh.sql("SHOW FUNCTIONS").collect()}
+    assert {"strpos", "st_symdifference"} <= fns
+    assert "st_symdifference" not in _user_functions(fresh.spark)
 
 
 def test_presto_type_name_nested():
@@ -257,3 +262,71 @@ def test_show_create_table(spark):
     ddl = eng.sql("SHOW CREATE TABLE nation").collect()[0]["Create Table"]
     assert ddl.startswith("CREATE TABLE nation (")
     assert '"n_nationkey" ' in ddl and '"n_name" varchar' in ddl
+
+
+def _user_functions(session) -> set[str]:
+    return {r[0] for r in session.sql("SHOW USER FUNCTIONS").collect()}
+
+
+def test_engine_creates_macros_on_first_reference(spark):
+    """Engine init creates no compat macro; a statement creates exactly
+    the macros it names, and nothing else."""
+    from presto_copy_spark.queries import registry, sqltext
+
+    registry.load_all()
+    eng = Engine(spark.newSession(), SF_DIR)
+    before = _user_functions(eng.spark)
+    eng.sql(registry.ORACLES["tpch_q01"]).collect()
+    assert _user_functions(eng.spark) == before
+    eng.sql(sqltext.PRESTO_DATETIME).collect()
+    assert _user_functions(eng.spark) - before == {"day_of_week"}
+    # a name inside a string literal creates nothing; a quoted one does
+    eng.sql("SELECT 'st_area(x)' AS s").collect()
+    assert _user_functions(eng.spark) - before == {"day_of_week"}
+    got = eng.sql('SELECT "day_of_week"(DATE \'2024-01-01\') AS d').collect()
+    assert got[0].d == 1
+
+
+def _null_call(name: str, sig: str) -> str:
+    """``name(CAST(NULL AS t1), ...)`` for a macro's argument signature."""
+    params, depth, cur = [], 0, ""
+    for ch in sig + ",":
+        depth += (ch == "<") - (ch == ">")
+        if ch == "," and depth == 0:
+            params.append(cur.split(None, 1)[1])
+            cur = ""
+        else:
+            cur += ch
+    return f"{name}({', '.join(f'CAST(NULL AS {t})' for t in params)})"
+
+
+def test_on_demand_macros_equal_eager_definitions(spark):
+    """Each of the macros whose body calls other macros, created on first
+    reference through Engine.sql in a fresh session, resolves and has
+    the definition the eager path creates.
+
+    A macro captures the SQL confs in force when it is created
+    (spark.sql.ansi.enabled, spark.sql.session.timeZone, ...).  Both
+    sessions are set up the same way before creating macros, so only
+    the creation time may differ."""
+    import json
+
+    from presto_copy_spark.functions import MACRO_DEPS, MACROS, register_all
+
+    def describe(session, name):
+        out = []
+        for (line,) in session.sql(f"DESCRIBE FUNCTION EXTENDED {name}").collect():
+            if line.startswith("Usage: {"):
+                line = json.loads(line[len("Usage: "):])
+                line.pop("sqlFunction.createTime")
+            out.append(line)
+        return out
+
+    eager = Engine(spark.newSession(), SF_DIR)
+    register_all(eager.spark)
+    lazy = Engine(spark.newSession(), SF_DIR)
+    with_deps = [n for n, deps in MACRO_DEPS.items() if deps]
+    assert "st_symdifference" in with_deps and len(with_deps) == 21
+    for name in with_deps:
+        lazy.sql(f"SELECT {_null_call(name, MACROS[name][0])} AS v").collect()
+        assert describe(lazy.spark, name) == describe(eager.spark, name), name
