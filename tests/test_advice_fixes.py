@@ -258,14 +258,164 @@ def test_java_options_append_to_deployment_value():
     deployment already picks one."""
     from presto_copy_spark.session import java_options
 
-    assert java_options(None, None, "") == "-XX:+UseParallelGC"
+    assert java_options(None) == "-XX:+UseParallelGC"
     assert (
-        java_options("-Dconfig=/etc/x -Xss4m", None, "-Xlog:gc")
-        == "-Dconfig=/etc/x -Xss4m -XX:+UseParallelGC -Xlog:gc"
+        java_options("-Dconfig=/etc/x -Xss4m")
+        == "-Dconfig=/etc/x -Xss4m -XX:+UseParallelGC"
     )
-    assert java_options(" -XX:+UseG1GC ", None, "") == "-XX:+UseG1GC"
-    assert java_options("-Da=1", "-XX:+UseZGC", "") == "-Da=1 -XX:+UseZGC"
-    assert java_options("", "", "") == ""
+    assert java_options(" -XX:+UseG1GC ") == "-XX:+UseG1GC"
+
+
+class _RecordingBuilder:
+    """Stands in for ``SparkSession.builder``: records what it is handed."""
+
+    def __init__(self):
+        self.conf = {}
+
+    def appName(self, name):
+        self.conf["spark.app.name"] = name
+        return self
+
+    def master(self, master):
+        self.conf["spark.master"] = master
+        return self
+
+    def config(self, key, value):
+        self.conf[key] = value
+        return self
+
+    def getOrCreate(self):
+        return self.conf
+
+
+def _builder_conf(monkeypatch, **kwargs):
+    import types
+
+    from presto_copy_spark import session
+
+    monkeypatch.setattr(
+        session, "SparkSession", types.SimpleNamespace(builder=_RecordingBuilder())
+    )
+    return session.get_spark("t", **kwargs)
+
+
+def test_engine_conf_local_map_is_pinned(tmp_path, monkeypatch):
+    """The engine's local defaults, key for key; with no
+    spark-defaults.conf all of them reach the builder."""
+    import os
+
+    from presto_copy_spark.session import engine_conf
+
+    expected = {
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.shuffle.partitions": "8",
+        "spark.sql.cbo.enabled": "true",
+        "spark.sql.cbo.joinReorder.enabled": "true",
+        "spark.sql.join.preferSortMergeJoin": "false",
+        "spark.sql.optimizer.runtime.bloomFilter.enabled": "false",
+        "spark.sql.optimizer.dynamicPartitionPruning.enabled": "true",
+        "spark.sql.optimizer.nestedSchemaPruning.enabled": "true",
+        "spark.sql.parquet.filterPushdown": "true",
+        "spark.sql.parquet.aggregatePushdown": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.driver.memory": "8g",
+        "spark.ui.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": "64MB",
+        "spark.cleaner.periodicGC.interval": "1min",
+        "spark.sql.codegen.cache.maxEntries": "5000",
+        "spark.driver.extraJavaOptions": "-XX:+UseParallelGC",
+        "spark.executor.extraJavaOptions": "-XX:+UseParallelGC",
+        "spark.shuffle.compress": "false",
+        "spark.shuffle.spill.compress": "false",
+        "spark.locality.wait": "0",
+    }
+    if os.path.isdir("/dev/shm"):
+        expected["spark.local.dir"] = "/dev/shm/spark_local"
+    assert engine_conf("local[8]", 8) == expected
+    monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path))  # no file there
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
+    handed = _builder_conf(monkeypatch)
+    assert handed == {**expected, "spark.app.name": "t", "spark.master": "local[8]"}
+
+
+def test_get_spark_yields_to_deployment_defaults(tmp_path, monkeypatch):
+    """Keys a deployment sets in spark-defaults.conf are not handed to
+    the builder (the file's value applies), its master is used, and the
+    JVM options still append the engine's collector flag."""
+    from presto_copy_spark.session import engine_conf
+
+    (tmp_path / "spark-defaults.conf").write_text(
+        "spark.master spark://h:7077\n"
+        "spark.driver.memory 2g\n"
+        "spark.sql.adaptive.enabled false\n"
+        "spark.executor.extraJavaOptions -Dexec=1\n"
+    )
+    monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
+    handed = _builder_conf(monkeypatch)
+    for key in ("spark.master", "spark.driver.memory", "spark.sql.adaptive.enabled"):
+        assert key not in handed, key
+    # the non-local master keeps the cluster posture
+    cluster = engine_conf("spark://h:7077", 8)
+    assert cluster["spark.sql.adaptive.enabled"] == "true"
+    assert cluster["spark.sql.optimizer.runtime.bloomFilter.enabled"] == "true"
+    assert handed["spark.sql.optimizer.runtime.bloomFilter.enabled"] == "true"
+    assert "spark.local.dir" not in handed and "spark.shuffle.compress" not in handed
+    assert handed["spark.driver.extraJavaOptions"] == "-XX:+UseParallelGC"
+    assert handed["spark.executor.extraJavaOptions"] == "-Dexec=1 -XX:+UseParallelGC"
+    # an explicit master argument wins over the deployment's
+    assert _builder_conf(monkeypatch, master="local[2]")["spark.master"] == "local[2]"
+
+
+def test_package_reads_no_engine_knob_env_vars():
+    """The package's only environment reads are the core count, the data
+    directory and Spark's own locations; settings go through
+    spark-defaults.conf or spark.conf, not new SPARK_GRAFT_* knobs."""
+    import pathlib
+    import re
+
+    import presto_copy_spark
+
+    pkg = pathlib.Path(presto_copy_spark.__file__).parent
+    read = re.compile(
+        r"""(?:environ\.get|environ\.setdefault|getenv|environ\[)\(?\s*["']([A-Z0-9_]+)["']"""
+    )
+    names = set()
+    for path in pkg.rglob("*.py"):
+        names |= set(read.findall(path.read_text()))
+    assert names <= {
+        "SPARK_GRAFT_CPUS",
+        "SPARK_GRAFT_SF_DIR",
+        "SPARK_HOME",
+        "SPARK_CONF_DIR",
+    }, sorted(names)
+    assert {n for n in names if n.startswith("SPARK_GRAFT_")} == {
+        "SPARK_GRAFT_CPUS",
+        "SPARK_GRAFT_SF_DIR",
+    }
+
+
+def test_bench_compact_line_drops_per_query_sf1x_over_budget(capsys):
+    """The final bench line keeps its totals and sheds the per-query
+    sf1x dicts when it would overflow the stdout tail budget."""
+    import json
+
+    import bench
+
+    small = {"value": 1.0, "n_failed": 0, "sf1x_tpch_total": 2.0, "sf1x_tpch_sec": {"q": 1.0}}
+    assert json.loads(bench.compact_line(small)) == small
+    big = {
+        **small,
+        "sf1x_tpch_sec": {f"tpch_q{i:03d}": 1.2345 for i in range(150)},
+        "sf1x_pipeline_sec": {"dedup_semantic": 0.5},
+    }
+    line = bench.compact_line(big)
+    assert len(line) <= bench.COMPACT_LINE_BUDGET
+    assert json.loads(line) == {"value": 1.0, "n_failed": 0, "sf1x_tpch_total": 2.0}
+    assert "dropped sf1x_tpch_sec, sf1x_pipeline_sec" in capsys.readouterr().err
 
 
 def test_deployment_conf_reads_spark_defaults(tmp_path, monkeypatch):

@@ -179,6 +179,28 @@ def test_semantic_dedup_drops_planted_copies(spark, sf_dir):
         assert cos > 0.999
 
 
+def test_semantic_dedup_pairs_on_vec_id_not_position(spark):
+    """Rows sharing a vec_id (a planted id vec_id + 1e6 meeting a natural
+    id >= 1e6) never pair with each other: the pair kernel masks on
+    a.vec_id < b.vec_id, as the oracle does, and emits one row per
+    distinct dropped id, as the oracle's GROUP BY dup does."""
+    from presto_copy_spark.operators.similarity import qdot
+    from presto_copy_spark.queries.similarity import _sem_pair_reduce_numpy
+
+    v = [1.0, 0.5, 0.25, 0.0]
+    w = [0.0, 1.0, 0.0, 0.5]  # cosine ~0.39 to v
+    rows = [(0, 5, w), (0, 2000000, v), (0, 2000000, v), (0, 2000001, v), (0, 2000001, v)]
+    base = spark.createDataFrame(
+        rows, "cluster int, vec_id long, embedding array<float>"
+    ).withColumn("nq", qdot(F.col("embedding"), F.col("embedding")))
+    got = sorted(
+        (r.dropped_vec_id, r.kept_vec_id)
+        for r in _sem_pair_reduce_numpy(base).collect()
+    )
+    assert all(d != k for d, k in got), got
+    assert got == [(2000001, 2000000)], got
+
+
 def test_temperature_mix_upweights_small_sources(spark, sf_dir):
     """alpha = 0.5 temperature sampling must give SMALLER sources a
     keep-rate at least as high as larger ones (the whole point of the

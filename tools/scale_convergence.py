@@ -181,8 +181,8 @@ PIPELINE_QUERIES = (
     # round-14: exact-substring spans + the learned quality gate.
     # CAVEAT for docs_quality_classifier in THIS tool: its training
     # runs driver-side at DataFrame build, so the noop-save timing here
-    # prices scoring only — use tools/r14_classifier_decades.py for the
-    # train-inclusive decade numbers (BASELINE.md §r14).
+    # prices scoring only — the train-inclusive decade numbers are in
+    # BASELINE.md §r14.
     "dedup_exact_substring,docs_quality_classifier"
 )
 
@@ -218,17 +218,12 @@ def main() -> None:
     from presto_copy_spark.session import get_spark
 
     registry.load_all()
+    spark = get_spark("scale-convergence")
     # shuffle partitions sized to the layouts measured here (1x-10x of
     # the sf0.1 fixtures): the local-session default of 8 fits sf0.1;
     # these sweeps get the full core count (session.py sizing note).
-    from presto_copy_spark.session import default_parallelism
-
-    spark = get_spark(
-        "scale-convergence",
-        shuffle_partitions=int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "")
-            or default_parallelism()
-        ),
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
     )
     layouts = build_layouts(spark, include_sf3x=True, include_sf10x=args.sf10x)
     if args.layouts:
